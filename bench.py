@@ -11,7 +11,7 @@ keeps only a ~2 KB stdout tail — the final line must carry every headline
 number by itself (VERDICT r8 #7), and the fresh-JVM per-set walls
 (VERDICT r8 #4) are the cross-round numbers contention cannot distort.
 Env: SPARK_GRAFT_BENCH_ISOLATED=0 skips the isolation pass (quick local
-iteration); SPARK_GRAFT_BENCH_SET=v1..v11 runs one set (child mode);
+iteration); SPARK_GRAFT_BENCH_SET=<a SETS key> runs one set (child mode);
 SPARK_GRAFT_BENCH_SET_RUNS=N (default 3) fresh-JVM children per set, the
 reported isolated wall is their MIN (VERDICT r11 #3 — robust to the
 measured cyclic external load; children default to reps=2 when N>1).
@@ -36,107 +36,209 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from dataselector_spark.session import get_spark  # noqa: E402
 from dataselector_spark.suite import QUERIES  # noqa: E402
 
-HEADLINE = [
-    "q1_pricing_summary",  # B6 aggregation throughput
-    "q3_shipping_priority",  # B2/B9 join + top-k
-    "q5_local_supplier_volume",  # B2 six-table join, broadcast dims
-    "q6_forecast_revenue",  # scan-filter-agg, full pushdown
-    "q18_large_volume_customer",  # HAVING semi-join + top-100
-    "q19_discounted_revenue",  # disjunctive broadcast join
-    "q9_product_type_profit",  # five-table join, two decimal aggregates
-    "q21_waiting_supplier",  # non-equi semi/anti joins on deduped pairs
-    "b02_join_revenue_per_nation",  # B2 multi-way join
-    "b05_asof_join",  # B5 merge-asof (shuffle+sort window)
-    "b04_interval_join_bucketed",  # B4 bucketed range join
-    "b08_outlier_zscore",  # B8 window QC pass
-    "b09_topk_per_group",  # B9 ranking window
-    "b12_dedup_exact",  # B12 exact dedup
-    "b13_minhash_lsh",  # B13 fuzzy dedup (explode+agg+self-join)
-    "b13_ngram_jaccard",  # B13 inverted-index jaccard with DF-cap skew guard
-    "b13_dedup_survivors",  # B13 pairs→components→anti-join (iterative CC)
-    "b13_dedup_pipeline_verified",  # B13 band-prune + exact-Jaccard verify
-    "b13_incremental_dedup",  # B13 batch-vs-corpus dedup, one batch shuffle
-    "b14_topk_cosine",  # B14 vector scan
-    "b15_text_stats",  # B15 text pass (higher-order funcs)
-    "b15_sequence_packing",  # B15 running-token-count bin assignment
-    "b15_decontaminate",  # B15 broadcast eval-shingle overlap
-    "b22_global_shuffle",  # B22 sharded deterministic corpus order
-    "b22_drift_ks",  # B22 KS drift on distributed two-level prefix sums
-    "b23_apply_changelog",  # B23 CDC compaction (single-shuffle window)
-    "b25_gap_fill_interpolate",  # B25 densify + linear interpolation
-    "b25_m4_downsample",  # B25 chart-pixel reduction (partial-agg shuffle)
-    "b25_time_weighted_avg",  # B25 irregular-sample TWA (one window+agg)
-    "b17_stream_tumbling",  # B17 streaming windowed agg
-    "flagship_minute_flag_counts",  # reference read path
-]
-
-# HEADLINE_V2 (VERDICT r6 #5): the round-6 additions, FROZEN as a second
-# versioned wall (`headline_v2_wall`) so r7+ rounds compare them
-# round-over-round exactly like the 31-query v1 set. Excluded from `value`
-# so the v1 metric stays comparable with BENCH_r3..r6. For the colocated
-# interval join, only the first COLD rep pays the one-time bucketed WRITE
-# of both sides (ensure_bucketed_table's fingerprint marker skips it on
-# later reps — and on later bench runs entirely, if /tmp persists); the
-# reported median-of-warm number is the amortized zero-shuffle probe
-# (ADVICE r6 #4; write-vs-probe split measured in tools/interval_ladder.py).
-HEADLINE_V2 = [
-    "b26_rolling_dau",  # B26 single-scan DAU/WAU contribution explode
-    "b15_repetition_filter",  # B15 Gopher repetition quality signals
-    "b16_ppm_roundtrip",  # B16 color codec roundtrip (Arrow mapInPandas)
-    "b22_zorder_key",  # B22 Morton key, map-only bit arithmetic
-    "b24_curation_pipeline",  # B24 end-to-end curation, 1 scan + 1 shuffle
-    "b04_interval_join_colocated",  # B4 bucketed-write + zero-shuffle probe
-]
-
-# HEADLINE_V3: the round-7 additions, FROZEN the same way (reported as
-# `headline_v3_wall`, excluded from `value`). Four r7 entries are left out
-# on purpose: b22_zorder_write_readback, b23_streaming_upsert_sink and
-# b22_compaction_readback time their own file WRITES (measured separately
-# in tools/ ladders, not a steady-state probe), and b22_observe_metrics
-# triggers its own internal action, which a per-query wall would
-# double-count.
-HEADLINE_V3 = [
-    "b05_asof_nearest",  # B5 nearest-direction merge-asof
-    "b12_dedup_normalized_text",  # B12 normalize->md5-digest dedup
-    "b24_token_budget_cap",  # B24 per-domain running-budget cap
-    "b22_zorder_key_3d",  # B22 3-D Morton key, map-only
-    "b23_scd2_dimension",  # B23 SCD2 intervals, single lead() window
-    "b13_editdist_neardup",  # B13 blocked exact Levenshtein
-    "b22_zone_map_stats",  # B22 data-skipping manifest pass
-    "b09_diversified_topk",  # B9 per-key cap + TakeOrdered
-    "b22_cell_sample_exact_k",  # B22 exact-k hash-ordered sample
-    "b16_wav_roundtrip",  # B16 WAV codec roundtrip (Arrow mapInPandas)
-    "b16_y4m_roundtrip",  # B16 Y4M video container roundtrip
-    "b14_ann_recall_report",  # B14 recall@10 eval, one broadcast pass
-    "b21_pandas_udaf_grouped_agg",  # B21 GROUPED_AGG pandas UDAF
-    "b23_scd2_incremental",  # B23 incremental SCD2 maintenance
-    "b14_pq_codes",  # B14 PQ encode, map-only literal arithmetic
-    "b14_pq_adc_topk",  # B14 ADC lookup-table top-k over codes
-    "b14_ivfpq_topk",  # B14 IVF prune + ADC rerank, end to end
-]
-
-
-# HEADLINE_V4: the round-8 additions, FROZEN the same way (reported as
-# `headline_v4_wall`, excluded from `value`). b02_bloom_filter_join is left
-# out for the same reason as the V3 write-timing entries: it executes its
-# own parquet write (the scoped-conf readback pattern), which a steady-state
-# per-query wall would mis-measure.
-HEADLINE_V4 = [
-    "b06_heavy_hitters_tokens",  # B6 exact frequent items, partial-agg shuffle
-    "b06_count_min_sketch",  # B6 value-checked CMS, 256-cell bounded shuffle
-    "b14_ivf_recall_clustered",  # B14 recall@10 on the clustered corpus
-    "b23_incremental_agg",  # B23 mergeable partial-agg refresh
-    "b16_ahash_neardup",  # B16 perceptual-hash image dedup, banded
-    "b16_phash256_neardup",  # B16 wide-hash image dedup (16-bit bands)
-    "b16_image_dedup_survivors",  # B16 image pairs -> CC -> survivors
-    "b13_repeated_span_coverage",  # B13 cross-doc duplicated-span fraction
-    "b13_prefix_filter_pairs",  # B13 lossless prefix-filtered Jaccard join
-    "b21_map_in_arrow",  # B21 zero-copy Arrow batch profile + JVM agg
-    "b26_triangle_count",  # B26 degree-oriented exact triangle counting
-    "b15_pmi_collocations",  # B15 log-free PMI collocation top-20
-    "b13_repeated_span_dedup",  # B13 duplicated-span corpus rewrite
-    "b06_nested_lineitems",  # B6 nested array<struct> higher-order compute
-]
+# The frozen bench sets, in report order. v1 is the headline (`value`, the
+# r3-stable 31-query set); v2..v12 each hold the entries added in one later
+# round, FROZEN when first recorded so every round times the same members
+# (BENCH_RECORDS.json and the headline_<set>_wall keys compare them
+# round over round). Never edit an existing set's members; a new set is a
+# new key. tests/test_streaming.py pins every set's members in order.
+SETS = {
+    "v1": [
+        "q1_pricing_summary",  # B6 aggregation throughput
+        "q3_shipping_priority",  # B2/B9 join + top-k
+        "q5_local_supplier_volume",  # B2 six-table join, broadcast dims
+        "q6_forecast_revenue",  # scan-filter-agg, full pushdown
+        "q18_large_volume_customer",  # HAVING semi-join + top-100
+        "q19_discounted_revenue",  # disjunctive broadcast join
+        "q9_product_type_profit",  # five-table join, two decimal aggregates
+        "q21_waiting_supplier",  # non-equi semi/anti joins on deduped pairs
+        "b02_join_revenue_per_nation",  # B2 multi-way join
+        "b05_asof_join",  # B5 merge-asof (shuffle+sort window)
+        "b04_interval_join_bucketed",  # B4 bucketed range join
+        "b08_outlier_zscore",  # B8 window QC pass
+        "b09_topk_per_group",  # B9 ranking window
+        "b12_dedup_exact",  # B12 exact dedup
+        "b13_minhash_lsh",  # B13 fuzzy dedup (explode+agg+self-join)
+        "b13_ngram_jaccard",  # B13 inverted-index jaccard with DF-cap skew guard
+        "b13_dedup_survivors",  # B13 pairs→components→anti-join (iterative CC)
+        "b13_dedup_pipeline_verified",  # B13 band-prune + exact-Jaccard verify
+        "b13_incremental_dedup",  # B13 batch-vs-corpus dedup, one batch shuffle
+        "b14_topk_cosine",  # B14 vector scan
+        "b15_text_stats",  # B15 text pass (higher-order funcs)
+        "b15_sequence_packing",  # B15 running-token-count bin assignment
+        "b15_decontaminate",  # B15 broadcast eval-shingle overlap
+        "b22_global_shuffle",  # B22 sharded deterministic corpus order
+        "b22_drift_ks",  # B22 KS drift on distributed two-level prefix sums
+        "b23_apply_changelog",  # B23 CDC compaction (single-shuffle window)
+        "b25_gap_fill_interpolate",  # B25 densify + linear interpolation
+        "b25_m4_downsample",  # B25 chart-pixel reduction (partial-agg shuffle)
+        "b25_time_weighted_avg",  # B25 irregular-sample TWA (one window+agg)
+        "b17_stream_tumbling",  # B17 streaming windowed agg
+        "flagship_minute_flag_counts",  # reference read path
+    ],
+    # v2, the round-6 additions. For the colocated interval join, only the
+    # first COLD rep pays the one-time bucketed WRITE of both sides
+    # (ensure_bucketed_table's fingerprint marker skips it on later reps —
+    # and on later bench runs entirely, if /tmp persists); the reported
+    # median-of-warm number is the amortized zero-shuffle probe (ADVICE r6
+    # #4; write-vs-probe split measured in tools/interval_ladder.py).
+    "v2": [
+        "b26_rolling_dau",  # B26 single-scan DAU/WAU contribution explode
+        "b15_repetition_filter",  # B15 Gopher repetition quality signals
+        "b16_ppm_roundtrip",  # B16 color codec roundtrip (Arrow mapInPandas)
+        "b22_zorder_key",  # B22 Morton key, map-only bit arithmetic
+        "b24_curation_pipeline",  # B24 end-to-end curation, 1 scan + 1 shuffle
+        "b04_interval_join_colocated",  # B4 bucketed-write + zero-shuffle probe
+    ],
+    # v3, the round-7 additions. Four r7 entries are left out on purpose:
+    # b22_zorder_write_readback, b23_streaming_upsert_sink and
+    # b22_compaction_readback time their own file WRITES (measured
+    # separately in tools/ ladders, not a steady-state probe), and
+    # b22_observe_metrics triggers its own internal action, which a
+    # per-query wall would double-count.
+    "v3": [
+        "b05_asof_nearest",  # B5 nearest-direction merge-asof
+        "b12_dedup_normalized_text",  # B12 normalize->md5-digest dedup
+        "b24_token_budget_cap",  # B24 per-domain running-budget cap
+        "b22_zorder_key_3d",  # B22 3-D Morton key, map-only
+        "b23_scd2_dimension",  # B23 SCD2 intervals, single lead() window
+        "b13_editdist_neardup",  # B13 blocked exact Levenshtein
+        "b22_zone_map_stats",  # B22 data-skipping manifest pass
+        "b09_diversified_topk",  # B9 per-key cap + TakeOrdered
+        "b22_cell_sample_exact_k",  # B22 exact-k hash-ordered sample
+        "b16_wav_roundtrip",  # B16 WAV codec roundtrip (Arrow mapInPandas)
+        "b16_y4m_roundtrip",  # B16 Y4M video container roundtrip
+        "b14_ann_recall_report",  # B14 recall@10 eval, one broadcast pass
+        "b21_pandas_udaf_grouped_agg",  # B21 GROUPED_AGG pandas UDAF
+        "b23_scd2_incremental",  # B23 incremental SCD2 maintenance
+        "b14_pq_codes",  # B14 PQ encode, map-only literal arithmetic
+        "b14_pq_adc_topk",  # B14 ADC lookup-table top-k over codes
+        "b14_ivfpq_topk",  # B14 IVF prune + ADC rerank, end to end
+    ],
+    # v4, the round-8 additions. b02_bloom_filter_join is left out for the
+    # same reason as the v3 write-timing entries: it executes its own
+    # parquet write (the scoped-conf readback pattern), which a
+    # steady-state per-query wall would mis-measure.
+    "v4": [
+        "b06_heavy_hitters_tokens",  # B6 exact frequent items, partial-agg shuffle
+        "b06_count_min_sketch",  # B6 value-checked CMS, 256-cell bounded shuffle
+        "b14_ivf_recall_clustered",  # B14 recall@10 on the clustered corpus
+        "b23_incremental_agg",  # B23 mergeable partial-agg refresh
+        "b16_ahash_neardup",  # B16 perceptual-hash image dedup, banded
+        "b16_phash256_neardup",  # B16 wide-hash image dedup (16-bit bands)
+        "b16_image_dedup_survivors",  # B16 image pairs -> CC -> survivors
+        "b13_repeated_span_coverage",  # B13 cross-doc duplicated-span fraction
+        "b13_prefix_filter_pairs",  # B13 lossless prefix-filtered Jaccard join
+        "b21_map_in_arrow",  # B21 zero-copy Arrow batch profile + JVM agg
+        "b26_triangle_count",  # B26 degree-oriented exact triangle counting
+        "b15_pmi_collocations",  # B15 log-free PMI collocation top-20
+        "b13_repeated_span_dedup",  # B13 duplicated-span corpus rewrite
+        "b06_nested_lineitems",  # B6 nested array<struct> higher-order compute
+    ],
+    # v5, the round-9 additions.
+    "v5": [
+        "b15_pmi_planted",  # B15 PMI with planted collocations (signal recovery)
+        "b06_heavy_hitters_planted",  # B6 heavy hitters with planted hot keys
+        "b11_variant_extract",  # B11 VARIANT parse/extract roundtrip, JVM-side
+        "b01_python_datasource",  # B1 Python Data Source API connector scan
+        "b20_state_store_read",  # B20 checkpointed stream + statestore read
+        "b01_python_stream_source",  # B1/B17 Python streaming connector
+        "b21_polymorphic_udtf",  # B21 analyze()-schema UDTF over TABLE()
+        "b21_udtf_partitioned",  # B21 stateful UDTF, PARTITION BY + ORDER BY
+        "b26_recursive_hierarchy",  # B26 Spark 4 recursive CTE hierarchy walk
+        "b11_collated_group",  # B11 UTF8_LCASE collated GROUP BY
+        "b26_pagerank_fixedpoint",  # B26 iterative PageRank, fixed-point bigint
+        "b24_scripting_lang_coverage",  # B24 SQL scripting WHILE-loop coverage
+        "b06_approx_top_k_exact",  # B6 frequent-items sketch, exact regime
+        "b06_hll_registers",  # B6 value-checked HyperLogLog registers + estimate
+        "b26_bfs_levels",  # B26 multi-source frontier BFS hop distance
+        "b09_skyline",  # B9 2-D skyline via local-skyline-then-merge
+        "b26_kcore",  # B26 k-core decomposition by iterative peeling
+        "b25_max_concurrency",  # B25 interval-overlap peak via boundary sweep
+        "b06_bitmap_distinct",  # B6 exact distinct via bitmap aggregates
+        "b25_interval_merge",  # B25 interval coalescing (islands & gaps)
+        "b26_sssp_bounded",  # B26 bounded-hop weighted SSSP (Bellman-Ford)
+        "b13_record_linkage",  # B13 blocked cross-table record linkage
+        "b25_ewma_dyadic",  # B25 exact dyadic-weight EWMA (bigint shifts)
+        "b26_attribution_last_touch",  # B26 conversion credit, one window pass
+        "b15_phrase_search",  # B15 positional-postings phrase query
+        "b16_scene_cuts",  # B16 shot-boundary detection, planted scene grid
+        "b25_cusum_drift",  # B25 CUSUM change-point, closed-form windows
+        "b04_range_anti_join",  # B4 bucketed range anti-join (no-error cohort)
+        "b26_top_paths",  # B26 session path mining, order-explicit assembly
+        "b22_kanonymity",  # B22 k-anonymity privacy audit (class census)
+        "b13_source_overlap",  # B13 cross-source shingle Jaccard matrix
+        "b25_autocorr",  # B25 exact ACF via centered integer products
+        "b22_proportional_allocation",  # B22 Hamilton apportionment, exact
+        "b26_clustering_coeff",  # B26 transitivity: 3T/W, exact ints + 1 div
+        "b19_lateness_profile",  # B19 watermark-setting lateness audit
+        "b20_stream_stream_left_outer",  # B20 outer join via watermark eviction
+        "b06_gini",  # B6/B22 Gini concentration, exact rank formula
+        "b26_assortativity",  # B26 degree assortativity, exact moments
+        "b16_silence_runs",  # B16 audio silence segmentation, planted gaps
+        "b14_knn_accuracy",  # B14 exact 10-NN majority-vote label accuracy
+    ],
+    # v6, the round-10 additions.
+    "v6": [
+        "b26_cooccurrence_skew_guard",  # B26 hot-cell census (edge-build audit)
+        "b14_knn_accuracy_clustered",  # B14 kNN accuracy, clustered corpus
+        "b13_record_linkage_planted",  # B13 linkage threshold calibration curve
+        "b01_python_stream_source_parallel",  # B1 executor-parallel stream source
+        "b01_python_stream_sink",  # B1 Python streaming sink, manifest commit
+        "b06_quantile_histogram",  # B6 fixed-range histogram quantile sketch
+        "b17_stream_quantile_sketch",  # B17/B6 sketch as live streaming state
+        "b22_benford_digits",  # B22 Benford first-digit forensic audit
+    ],
+    # v7, the round-11 additions.
+    "v7": [
+        "b06_quantile_refined",  # B6 two-level hot-set refinement sketch
+        "b15_bm25_topk",  # B15 BM25 document ranking, fixed-point rationals
+        "b26_communities_lpa",  # B26 4-round synchronous label propagation
+        "b26_modularity",  # B26 Newman partition-quality audit (exact core)
+        "b26_link_prediction",  # B26 common-neighbor/Jaccard top-20
+    ],
+    # v8, the round-12 additions.
+    "v8": [
+        "b26_link_prediction_capped",  # B26 p99 hub-degree-capped link pred
+        "b06_kmv_intersect",  # B6 KMV distinct-intersection sketch
+        "b22_group_reservoir",  # B22 deterministic per-group exact-k sampler
+        "b13_leakage_safe_split",  # B13/B22 cluster-keyed split + leak audit
+        "b22_budgeted_split",  # B22 Hamilton-apportioned exact-budget sample
+        "b06_kmv_merge",  # B6 KMV min-merge rollup (__ALL__ from k-sets)
+    ],
+    # v9, the round-12 session-3 additions.
+    "v9": [
+        "b15_surprisal_tertiles",  # B15 unigram-LM surprisal tertile buckets
+        "b14_rrf_hybrid",  # B14/B15 reciprocal-rank-fusion hybrid retrieval
+        # extended same-session, before v9's first recorded reading — the
+        # freeze starts with the first cross-round artifact that carries it
+        "b22_target_mixture",  # B22 capped target-mix waterfall allocation
+        "b13_minhash_shard_merge",  # B13 per-shard MinHash min-merge audit
+        "b15_packing_efficiency",  # B15 batch-padding waste audit, 3 strategies
+        "b26_funnel_exclusion",  # B26 negation funnel, zero joins, one shuffle
+    ],
+    # v10, the round-13 additions.
+    "v10": [
+        "b15_surprisal_planted",  # B15 planted heavy-tail tertile recovery
+        "b14_rrf_fusion_gain",  # B14 RRF recall gain on disjoint relevance
+        "b13_kmv_source_similarity",  # B13/B6 constant-state source Jaccard
+    ],
+    # v11, the late-r13 addition.
+    "v11": [
+        "b06_kmv_difference",  # B6 KMV set-difference (churn) sketch
+    ],
+    # v12, the round-14 additions.
+    "v12": [
+        "b14_mips_topk",  # B14 MIPS via norm-augmentation reduction
+        "b13_incremental_ingest_dedup",  # B13 batch-vs-corpus band join
+        # extended same-session, before v12's first recorded artifact (the
+        # freeze starts with the first cross-round artifact that carries it)
+        "b14_mips_lsh",  # B14 asymmetric-LSH MIPS (plane-replay oracle)
+    ],
+}
+# The sets whose walls the final line also reports drift-normalized; the
+# key set predates v7 and is kept as-is so old reports stay comparable.
+_NORMALIZED_SETS = ("v2", "v3", "v4", "v5", "v6")
 
 # r7's measured probe value — the normalization anchor (VERDICT r7 #3).
 # `*_normalized` walls = raw * (CPU_PROBE_REF / cpu_probe_s): they answer
@@ -192,139 +294,6 @@ def _cpu_probe_multi(workers: int = 8) -> float | None:
         return round(time.perf_counter() - t0, 3)
     except Exception:  # pragma: no cover - restricted environments
         return None
-
-
-# HEADLINE_V5: the round-9 additions, FROZEN the same way (reported as
-# `headline_v5_wall`, excluded from `value`).
-HEADLINE_V5 = [
-    "b15_pmi_planted",  # B15 PMI with planted collocations (signal recovery)
-    "b06_heavy_hitters_planted",  # B6 heavy hitters with planted hot keys
-    "b11_variant_extract",  # B11 VARIANT parse/extract roundtrip, JVM-side
-    "b01_python_datasource",  # B1 Python Data Source API connector scan
-    "b20_state_store_read",  # B20 checkpointed stream + statestore read
-    "b01_python_stream_source",  # B1/B17 Python streaming connector
-    "b21_polymorphic_udtf",  # B21 analyze()-schema UDTF over TABLE()
-    "b21_udtf_partitioned",  # B21 stateful UDTF, PARTITION BY + ORDER BY
-    "b26_recursive_hierarchy",  # B26 Spark 4 recursive CTE hierarchy walk
-    "b11_collated_group",  # B11 UTF8_LCASE collated GROUP BY
-    "b26_pagerank_fixedpoint",  # B26 iterative PageRank, fixed-point bigint
-    "b24_scripting_lang_coverage",  # B24 SQL scripting WHILE-loop coverage
-    "b06_approx_top_k_exact",  # B6 frequent-items sketch, exact regime
-    "b06_hll_registers",  # B6 value-checked HyperLogLog registers + estimate
-    "b26_bfs_levels",  # B26 multi-source frontier BFS hop distance
-    "b09_skyline",  # B9 2-D skyline via local-skyline-then-merge
-    "b26_kcore",  # B26 k-core decomposition by iterative peeling
-    "b25_max_concurrency",  # B25 interval-overlap peak via boundary sweep
-    "b06_bitmap_distinct",  # B6 exact distinct via bitmap aggregates
-    "b25_interval_merge",  # B25 interval coalescing (islands & gaps)
-    "b26_sssp_bounded",  # B26 bounded-hop weighted SSSP (Bellman-Ford)
-    "b13_record_linkage",  # B13 blocked cross-table record linkage
-    "b25_ewma_dyadic",  # B25 exact dyadic-weight EWMA (bigint shifts)
-    "b26_attribution_last_touch",  # B26 conversion credit, one window pass
-    "b15_phrase_search",  # B15 positional-postings phrase query
-    "b16_scene_cuts",  # B16 shot-boundary detection, planted scene grid
-    "b25_cusum_drift",  # B25 CUSUM change-point, closed-form windows
-    "b04_range_anti_join",  # B4 bucketed range anti-join (no-error cohort)
-    "b26_top_paths",  # B26 session path mining, order-explicit assembly
-    "b22_kanonymity",  # B22 k-anonymity privacy audit (class census)
-    "b13_source_overlap",  # B13 cross-source shingle Jaccard matrix
-    "b25_autocorr",  # B25 exact ACF via centered integer products
-    "b22_proportional_allocation",  # B22 Hamilton apportionment, exact
-    "b26_clustering_coeff",  # B26 transitivity: 3T/W, exact ints + 1 div
-    "b19_lateness_profile",  # B19 watermark-setting lateness audit
-    "b20_stream_stream_left_outer",  # B20 outer join via watermark eviction
-    "b06_gini",  # B6/B22 Gini concentration, exact rank formula
-    "b26_assortativity",  # B26 degree assortativity, exact moments
-    "b16_silence_runs",  # B16 audio silence segmentation, planted gaps
-    "b14_knn_accuracy",  # B14 exact 10-NN majority-vote label accuracy
-]
-
-# HEADLINE_V6: the round-10 additions, FROZEN the same way (reported as
-# `headline_v6_wall`, excluded from `value`).
-HEADLINE_V6 = [
-    "b26_cooccurrence_skew_guard",  # B26 hot-cell census (edge-build audit)
-    "b14_knn_accuracy_clustered",  # B14 kNN accuracy, clustered corpus
-    "b13_record_linkage_planted",  # B13 linkage threshold calibration curve
-    "b01_python_stream_source_parallel",  # B1 executor-parallel stream source
-    "b01_python_stream_sink",  # B1 Python streaming sink, manifest commit
-    "b06_quantile_histogram",  # B6 fixed-range histogram quantile sketch
-    "b17_stream_quantile_sketch",  # B17/B6 sketch as live streaming state
-    "b22_benford_digits",  # B22 Benford first-digit forensic audit
-]
-
-# HEADLINE_V7: the round-11 additions, FROZEN the same way (reported as
-# `headline_v7_wall`, excluded from `value`).
-HEADLINE_V7 = [
-    "b06_quantile_refined",  # B6 two-level hot-set refinement sketch
-    "b15_bm25_topk",  # B15 BM25 document ranking, fixed-point rationals
-    "b26_communities_lpa",  # B26 4-round synchronous label propagation
-    "b26_modularity",  # B26 Newman partition-quality audit (exact core)
-    "b26_link_prediction",  # B26 common-neighbor/Jaccard top-20
-]
-
-# HEADLINE_V8: the round-12 additions, FROZEN the same way (reported as
-# `headline_v8_wall`, excluded from `value`).
-HEADLINE_V8 = [
-    "b26_link_prediction_capped",  # B26 p99 hub-degree-capped link pred
-    "b06_kmv_intersect",  # B6 KMV distinct-intersection sketch
-    "b22_group_reservoir",  # B22 deterministic per-group exact-k sampler
-    "b13_leakage_safe_split",  # B13/B22 cluster-keyed split + leak audit
-    "b22_budgeted_split",  # B22 Hamilton-apportioned exact-budget sample
-    "b06_kmv_merge",  # B6 KMV min-merge rollup (__ALL__ from k-sets)
-]
-
-# HEADLINE_V9: the round-12 session-3 additions, FROZEN the same way
-# (reported as `headline_v9_wall`, excluded from `value`).
-HEADLINE_V9 = [
-    "b15_surprisal_tertiles",  # B15 unigram-LM surprisal tertile buckets
-    "b14_rrf_hybrid",  # B14/B15 reciprocal-rank-fusion hybrid retrieval
-    # extended same-session, before v9's first recorded reading — the
-    # freeze starts with the first cross-round artifact that carries it
-    "b22_target_mixture",  # B22 capped target-mix waterfall allocation
-    "b13_minhash_shard_merge",  # B13 per-shard MinHash min-merge audit
-    "b15_packing_efficiency",  # B15 batch-padding waste audit, 3 strategies
-    "b26_funnel_exclusion",  # B26 negation funnel, zero joins, one shuffle
-]
-
-# HEADLINE_V10: the round-13 additions, FROZEN the same way (reported as
-# `headline_v10_wall`, excluded from `value`).
-HEADLINE_V10 = [
-    "b15_surprisal_planted",  # B15 planted heavy-tail tertile recovery
-    "b14_rrf_fusion_gain",  # B14 RRF recall gain on disjoint relevance
-    "b13_kmv_source_similarity",  # B13/B6 constant-state source Jaccard
-]
-
-# HEADLINE_V11: the late-r13 addition, FROZEN the same way (reported as
-# `headline_v11_wall`, excluded from `value`).
-HEADLINE_V11 = [
-    "b06_kmv_difference",  # B6 KMV set-difference (churn) sketch
-]
-
-# HEADLINE_V12: the round-14 additions, FROZEN the same way (timed in the
-# session pass and reported as `headline_v12_wall`, excluded from `value`).
-HEADLINE_V12 = [
-    "b14_mips_topk",  # B14 MIPS via norm-augmentation reduction
-    "b13_incremental_ingest_dedup",  # B13 batch-vs-corpus band join
-    # extended same-session, before v12's first recorded artifact (the
-    # freeze starts with the first cross-round artifact that carries it)
-    "b14_mips_lsh",  # B14 asymmetric-LSH MIPS (plane-replay oracle)
-]
-
-# The frozen versioned sets, addressable for per-set isolated re-runs.
-SETS = {
-    "v1": HEADLINE,
-    "v2": HEADLINE_V2,
-    "v3": HEADLINE_V3,
-    "v4": HEADLINE_V4,
-    "v5": HEADLINE_V5,
-    "v6": HEADLINE_V6,
-    "v7": HEADLINE_V7,
-    "v8": HEADLINE_V8,
-    "v9": HEADLINE_V9,
-    "v10": HEADLINE_V10,
-    "v11": HEADLINE_V11,
-    "v12": HEADLINE_V12,
-}
 
 
 def _time_queries(spark, names, sf_dir: str, reps: int) -> dict[str, float]:
@@ -509,35 +478,17 @@ def main() -> None:
     # footers + codegen compilation), report the median of the warm runs —
     # medians are robust to local[32] GC jitter that min/best-of-2 is not.
     timings = _time_queries(
-        spark,
-        HEADLINE
-        + HEADLINE_V2
-        + HEADLINE_V3
-        + HEADLINE_V4
-        + HEADLINE_V5
-        + HEADLINE_V6
-        + HEADLINE_V7
-        + HEADLINE_V8
-        + HEADLINE_V9
-        + HEADLINE_V10
-        + HEADLINE_V11
-        + HEADLINE_V12,
-        sf_dir,
-        reps,
+        spark, [n for names in SETS.values() for n in names], sf_dir, reps
     )
 
-    total = round(sum(timings[n] for n in HEADLINE), 3)
-    extra = round(sum(timings[n] for n in HEADLINE_V2), 3)
-    extra3 = round(sum(timings[n] for n in HEADLINE_V3), 3)
-    extra4 = round(sum(timings[n] for n in HEADLINE_V4), 3)
-    extra5 = round(sum(timings[n] for n in HEADLINE_V5), 3)
-    extra6 = round(sum(timings[n] for n in HEADLINE_V6), 3)
-    extra7 = round(sum(timings[n] for n in HEADLINE_V7), 3)
-    extra8 = round(sum(timings[n] for n in HEADLINE_V8), 3)
-    extra9 = round(sum(timings[n] for n in HEADLINE_V9), 3)
-    extra10 = round(sum(timings[n] for n in HEADLINE_V10), 3)
-    extra11 = round(sum(timings[n] for n in HEADLINE_V11), 3)
-    extra12 = round(sum(timings[n] for n in HEADLINE_V12), 3)
+    walls = {
+        key: round(sum(timings[n] for n in names), 3) for key, names in SETS.items()
+    }
+    total = walls["v1"]
+    set_walls = {}
+    for key in list(SETS)[1:]:
+        set_walls[f"headline_{key}_wall"] = walls[key]
+        set_walls[f"headline_{key}_n"] = len(SETS[key])
     probe = _cpu_probe()
     multi_probe = _cpu_probe_multi()
     scale = CPU_PROBE_REF / probe if probe > 0 else 1.0
@@ -645,34 +596,13 @@ def main() -> None:
                 # v1 per-query walls only on this line (the full 68-query
                 # dict is on the detail line / BENCH_DETAIL.json) — keeps
                 # the line under the driver's ~2 KB tail capture
-                "queries": {n: timings[n] for n in HEADLINE},
+                "queries": {n: timings[n] for n in SETS["v1"]},
                 # `value` spans the r3-stable 31-query headline set only;
-                # the 6 r6 additions are timed in queries{} and summed here
-                "headline_n": len(HEADLINE),
-                "headline_v2_wall": extra,
-                "headline_v2_n": len(HEADLINE_V2),
-                "headline_v3_wall": extra3,
-                "headline_v3_n": len(HEADLINE_V3),
-                "headline_v4_wall": extra4,
-                "headline_v4_n": len(HEADLINE_V4),
-                "headline_v5_wall": extra5,
-                "headline_v5_n": len(HEADLINE_V5),
-                "headline_v6_wall": extra6,
-                "headline_v6_n": len(HEADLINE_V6),
-                "headline_v7_wall": extra7,
-                "headline_v7_n": len(HEADLINE_V7),
-                "headline_v8_wall": extra8,
-                "headline_v8_n": len(HEADLINE_V8),
-                "headline_v9_wall": extra9,
-                "headline_v9_n": len(HEADLINE_V9),
-                "headline_v10_wall": extra10,
-                "headline_v10_n": len(HEADLINE_V10),
-                "headline_v11_wall": extra11,
-                "headline_v11_n": len(HEADLINE_V11),
-                "headline_v12_wall": extra12,
-                "headline_v12_n": len(HEADLINE_V12),
+                # every later set is summed into headline_<set>_wall/_n
+                "headline_n": len(SETS["v1"]),
+                **set_walls,
                 # legacy key (r6 reports): same value as headline_v2_wall
-                "extra_r6_wall": extra,
+                "extra_r6_wall": walls["v2"],
                 # methodology stamp (ADVICE r3 #3): r1/r2 were best-of-2,
                 # r3+ are median of warm reps — make the JSON self-describing
                 "method": "median_of_warm",
@@ -690,11 +620,10 @@ def main() -> None:
                 # comparison number, so verdicts stop hand-arguing drift.
                 "cpu_probe_ref": CPU_PROBE_REF,
                 "value_normalized": round(total * scale, 3),
-                "headline_v2_wall_normalized": round(extra * scale, 3),
-                "headline_v3_wall_normalized": round(extra3 * scale, 3),
-                "headline_v4_wall_normalized": round(extra4 * scale, 3),
-                "headline_v5_wall_normalized": round(extra5 * scale, 3),
-                "headline_v6_wall_normalized": round(extra6 * scale, 3),
+                **{
+                    f"headline_{k}_wall_normalized": round(walls[k] * scale, 3)
+                    for k in _NORMALIZED_SETS
+                },
             }
         )
     )

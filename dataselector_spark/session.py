@@ -16,6 +16,27 @@ import os
 from pyspark.sql import SparkSession
 
 
+def parse_extra_conf(text: str) -> dict[str, str]:
+    """Parse $SPARK_GRAFT_EXTRA_CONF: semicolon-separated ``key=value`` pairs
+    for A/B experiments and per-host tuning without code edits.
+
+    A value cannot contain ';' (there is no escape). Empty segments, such as
+    a trailing ';', are skipped; any other segment without '=' is a typo and
+    raises ValueError rather than silently running without its setting.
+    """
+    conf: dict[str, str] = {}
+    for item in text.split(";"):
+        if not item.strip():
+            continue
+        if "=" not in item:
+            raise ValueError(
+                f"SPARK_GRAFT_EXTRA_CONF segment {item!r} is not key=value"
+            )
+        k, v = item.split("=", 1)
+        conf[k.strip()] = v.strip()
+    return conf
+
+
 def get_spark(
     app_name: str = "dataselector_spark",
     cpus: int | None = None,
@@ -64,14 +85,10 @@ def get_spark(
         # Streaming tests use small deterministic micro-batches.
         .config("spark.sql.streaming.schemaInference", "false")
     )
-    # r16: env-driven conf overrides for A/B experiments and per-host
-    # tuning without code edits — semicolon-separated k=v pairs. Applied
-    # BEFORE the caller's extra_conf so explicit code wins.
-    env_extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for item in env_extra.split(";"):
-        if "=" in item:
-            k, v = item.split("=", 1)
-            builder = builder.config(k.strip(), v.strip())
+    # Env-driven conf overrides, applied BEFORE the caller's extra_conf so
+    # explicit code wins.
+    for k, v in parse_extra_conf(os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")).items():
+        builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -4991,9 +4991,10 @@ def b02_bloom_filter_join(spark, sf_dir):
             "l_orderkey", "l_linenumber", "l_extendedprice", "o_orderpriority"
         )
         plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "might_contain" in plan.lower(), (
-            "runtime bloom filter was not injected:\n" + plan[:2000]
-        )
+        if "might_contain" not in plan.lower():
+            raise RuntimeError(
+                "runtime bloom filter was not injected:\n" + plan[:2000]
+            )
         # Per-session unique path (ADVICE r8): a fixed /tmp name let two
         # concurrent sessions (pytest + driver differential) clobber each
         # other's output mid-readback.
@@ -5385,7 +5386,7 @@ def b02_aqe_skew_join(spark, sf_dir):
             "k", "l_orderkey", "l_linenumber", "l_quantity", "w"
         )
         # The AQE rewrite exists only in an EXECUTED plan, and each action
-        # (.write, .count) gets its own QueryExecution — so the assert must
+        # (.write, .count) gets its own QueryExecution — so the check must
         # ride an action bound to j's own (found the hard way: asserting
         # after .write reads the unexecuted isFinalPlan=false plan and
         # always fails).  queryExecution.toRdd is j's OWN execution —
@@ -5393,11 +5394,13 @@ def b02_aqe_skew_join(spark, sf_dir):
         # ships nothing to Python, unlike the full-result collect this
         # replaced (ADVICE r8: driver OOM risk at larger SFs).
         n = j._jdf.queryExecution().toRdd().count()
-        assert n > 0
+        if n <= 0:
+            raise RuntimeError("AQE skew-join probe produced no rows")
         plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "skew=true" in plan, (
-            "AQE skew-join split did not fire:\n" + plan[:2000]
-        )
+        if "skew=true" not in plan:
+            raise RuntimeError(
+                "AQE skew-join split did not fire:\n" + plan[:2000]
+            )
     finally:
         for k, v in saved.items():
             if v is None:

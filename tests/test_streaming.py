@@ -579,10 +579,32 @@ def test_python_stream_sink_failure_leaves_no_manifest(spark, tmp_path):
     assert manifests == []
 
 
+# Frozen bench-set membership, v1-v12: (size, sha256 of the member names
+# joined by newlines, in order, first 16 hex digits). BENCH_RECORDS.json
+# compares these exact sets round over round, so any edit to an existing
+# set's members or order must fail here; a new set adds a line.
+_FROZEN_SET_DIGESTS = {
+    "v1": (31, "84a5a6d09a0bcadd"),
+    "v2": (6, "7cf5b2665ecbe144"),
+    "v3": (17, "29a1f15919e5edec"),
+    "v4": (14, "b61a0fa52cae55c2"),
+    "v5": (40, "996cd84405d975ed"),
+    "v6": (8, "617d7c7cea6bd812"),
+    "v7": (5, "30d47f8ada7f104e"),
+    "v8": (6, "b67640f381f848ab"),
+    "v9": (6, "31fe35ccff68d878"),
+    "v10": (3, "dc1bdcced11c884b"),
+    "v11": (1, "f52d4f8551839ac5"),
+    "v12": (3, "bd6b4f86af1d1bf2"),
+}
+
+
 def test_bench_sets_name_real_suite_entries():
     """Every frozen bench set member must be a registered suite entry —
-    a typo'd name in a new HEADLINE_V* would otherwise only surface as
-    a KeyError halfway through the driver's per-round bench run."""
+    a typo'd name in a new set would otherwise only surface as a KeyError
+    halfway through the driver's per-round bench run — and every frozen
+    set keeps its exact members in order."""
+    import hashlib
     import os
     import sys
 
@@ -595,6 +617,14 @@ def test_bench_sets_name_real_suite_entries():
         missing = [n for n in names if n not in QUERIES]
         assert not missing, (key, missing)
         assert len(set(names)) == len(names), (key, "duplicate names")
+
+    assert list(SETS)[: len(_FROZEN_SET_DIGESTS)] == list(_FROZEN_SET_DIGESTS)
+    for key, (size, digest) in _FROZEN_SET_DIGESTS.items():
+        got = hashlib.sha256("\n".join(SETS[key]).encode()).hexdigest()[:16]
+        assert (len(SETS[key]), got) == (size, digest), (
+            f"frozen bench set {key} changed; BENCH_RECORDS.json compares "
+            "its exact members — add a new set instead of editing this one"
+        )
 
 
 def test_python_stream_sink_entry_cleans_up_tmp(spark):
